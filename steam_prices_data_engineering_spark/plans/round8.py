@@ -240,13 +240,12 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the result set is partitioning-invariant (oracle + boundary
     # tests). r11: sized by the shared footer-derived helper (reproduces
     # 4 at every local sf; scales with landed rows).
-    from ..streaming.windows import stream_state_partitions
+    from ..streaming.windows import stateful_start, stream_state_partitions
     from ..sources.tables import table_path
 
-    parts = stream_state_partitions(table_path(sf_dir, "events"))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    try:
+    with stateful_start(
+        spark, stream_state_partitions(table_path(sf_dir, "events"))
+    ):
         q = (
             out.writeStream.format("memory")
             .queryName(sink)
@@ -254,9 +253,7 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q.awaitTermination()
     return spark.table(sink)
 
 

@@ -276,14 +276,9 @@ def _restart_run_once(spark: SparkSession, src: str, ckpt: str) -> str:
     # helper over the scratch landing (floor=8, the r9-measured value at
     # local scale; Spark restores the run-1 count from the checkpoint if
     # a larger run-2 landing would derive differently).
-    from ..streaming.windows import stream_state_partitions
+    from ..streaming.windows import stateful_start, stream_state_partitions
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        stream_state_partitions(src, floor=8),
-    )
-    try:
+    with stateful_start(spark, stream_state_partitions(src, floor=8)):
         q = (
             _restart_agg(stream)
             .writeStream.format("memory")
@@ -293,9 +288,7 @@ def _restart_run_once(spark: SparkSession, src: str, ckpt: str) -> str:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q.awaitTermination()
     return sink
 
 
@@ -696,14 +689,9 @@ def streaming_state_introspection(
         # output (CLAUDE.md), so the count is free to change. r11: sized
         # by the shared footer-derived helper (floor=8, the r9-measured
         # value at local scale; scales with landed rows).
-        from ..streaming.windows import stream_state_partitions
+        from ..streaming.windows import stateful_start, stream_state_partitions
 
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            stream_state_partitions(src, floor=8),
-        )
-        try:
+        with stateful_start(spark, stream_state_partitions(src, floor=8)):
             q = (
                 stream.groupBy(
                     F.window("ts", "1 hour").alias("w"), "event_type"
@@ -716,9 +704,7 @@ def streaming_state_introspection(
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        q.awaitTermination()
         state = spark.read.format("statestore").load(ckpt)
         audited = state.groupBy(
             F.col("key.event_type").alias("event_type")

@@ -14,12 +14,17 @@ cross-engine value-hash is type-sensitive and epoch longs are unambiguous.
 
 from __future__ import annotations
 
+import logging
+import threading
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
+
+log = logging.getLogger("steam_prices_spark")
 
 
 def tumbling_counts(events: DataFrame, duration: str = "10 minutes") -> DataFrame:
@@ -107,34 +112,66 @@ def stream_state_partitions(
     every local sf (sf0.1 events = 100k rows -> 4) while a 1e9-row
     landing derives 512. SPARK_GRAFT_STREAM_STATE_PARTITIONS still
     overrides everything for cluster tuning."""
+    import glob
     import math
     import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     if env:
         return env
     n_rows = 0
     if events_path and os.path.exists(events_path):
+        files = (
+            sorted(glob.glob(os.path.join(events_path, "*.parquet")))
+            if os.path.isdir(events_path)
+            else [events_path]
+        )
         try:
-            import glob
-
-            import pyarrow.parquet as pq
-
-            files = (
-                sorted(glob.glob(os.path.join(events_path, "*.parquet")))
-                if os.path.isdir(events_path)
-                else [events_path]
+            n_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+        except (OSError, pa.ArrowInvalid) as e:
+            log.warning(
+                "state partitions: footer read of %s failed (%s); "
+                "using floor %d",
+                events_path,
+                e,
+                floor,
             )
-            n_rows = sum(
-                pq.ParquetFile(f).metadata.num_rows for f in files
-            )
-        except Exception:
             n_rows = 0
     if n_rows <= 0:
         return str(floor)
     want = max(1, math.ceil(n_rows / rows_per_partition))
     parts = 1 << max(0, (want - 1).bit_length())
     return str(min(max(parts, floor), cap))
+
+
+# Serializes the set -> start() -> restore window below. The conf is
+# session-global, so two unguarded windows on one session interleave:
+# one thread's restore lands between the other's set and start().
+_SHUFFLE_CONF_LOCK = threading.Lock()
+
+
+@contextmanager
+def stateful_start(spark, parts):
+    """Start a stateful stream with `parts` state-store partitions.
+
+    Run `writeStream...start()` inside this block. Spark clones the
+    session conf into the query when `start()` runs, and the first
+    batch pins `spark.sql.shuffle.partitions` into the checkpoint's
+    offset metadata, so the count holds for the query's whole life
+    (and a restarted checkpoint keeps its first run's count whatever
+    `parts` says). The session value is restored on exit, so batch
+    plans are untouched; the lock makes the window safe for concurrent
+    starts on one session. Await termination outside the block."""
+    with _SHUFFLE_CONF_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def run_to_memory_sink(
@@ -146,17 +183,16 @@ def run_to_memory_sink(
     """Run a streaming aggregation to completion (availableNow) into a
     memory sink; return the materialized table.
 
-    The stateful operator's state-store partition count is frozen from
-    `spark.sql.shuffle.partitions` at query start; these aggregates key
-    on a handful of (window, dim) values, so the session default (32)
-    makes every micro-batch commit mostly-empty state files — pure
-    commit I/O (the round-8 streaming_join_then_window lesson, 18.2s ->
-    3.1s; re-measured here: enriched tumbling agg 1.95s -> ~1.3s at
-    sf0.1). Sized via `stream_state_partitions` (footer-derived,
-    env-overridable; r10 sweep: 4 beat 8 in every paired round on the
-    enriched agg at sf0.1, and the derivation reproduces 4 there) and
-    restored after start, so batch plans are untouched. Partition count
-    never reaches compared columns — values identical."""
+    These aggregates key on a handful of (window, dim) values, so the
+    session default (32) state partitions makes every micro-batch commit
+    mostly-empty state files — pure commit I/O (the round-8
+    streaming_join_then_window lesson, 18.2s -> 3.1s; re-measured here:
+    enriched tumbling agg 1.95s -> ~1.3s at sf0.1). Sized via
+    `stream_state_partitions` (footer-derived, env-overridable; r10
+    sweep: 4 beat 8 in every paired round on the enriched agg at sf0.1,
+    and the derivation reproduces 4 there) and applied through
+    `stateful_start`. Partition count never reaches compared columns —
+    values identical."""
     import os
 
     spark = agg.sparkSession
@@ -167,9 +203,7 @@ def run_to_memory_sink(
             "SPARK_GRAFT_STREAM_STATE_PARTITIONS", str(state_partitions)
         )
     sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    try:
+    with stateful_start(spark, parts):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -177,9 +211,7 @@ def run_to_memory_sink(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q.awaitTermination()
     return spark.table(sink)
 
 
