@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import SCRATCH_DIR
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.text import token_hash_array
 from ..functions.vectors import cosine
@@ -246,7 +247,7 @@ def simsearch_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 # original parquet — proving the CSV hop is lossless.
 # ---------------------------------------------------------------------------
 
-_CSV_DIR = "/root/repo/.scratch/nation_csv"
+_CSV_DIR = f"{SCRATCH_DIR}/nation_csv"
 
 _CSV_SQL = """
 SELECT r_name, CAST(count(*) AS BIGINT) AS n_nations

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import SCRATCH_DIR
 from ..functions.rounding import dround_sql as R
 from ..sources.tables import read_table, spread, table_path
 from .registry import register
@@ -112,7 +113,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the oracle aggregates the original parquet — the JSON hop must be lossless.
 # ---------------------------------------------------------------------------
 
-_JSONL_DIR = "/root/repo/.scratch/events_jsonl"
+_JSONL_DIR = f"{SCRATCH_DIR}/events_jsonl"
 
 _JSONL_SQL = """
 SELECT event_type, CAST(count(*) AS BIGINT) AS n,

@@ -454,7 +454,7 @@ def streaming_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags emit exactly once per closed session — collect_list state is
     bounded by the inactivity gap."""
     from ..sources.tables import events_stream
-    from .scale_patterns import _run_to_memory
+    from ..streaming.windows import run_to_memory_sink
 
     sym = (
         F.when(F.col("event_type") == "view", "V")
@@ -493,8 +493,7 @@ def streaming_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_like(F.col("syms"), F.lit(_CEP_PATTERNS[1][1])),
         )
     )
-    sink = _run_to_memory(agg, "stream_cep", "complete")
-    return spark.table(sink)
+    return spark.table(run_to_memory_sink(agg, "stream_cep", "complete"))
 
 
 # ---------------------------------------------------------------------------

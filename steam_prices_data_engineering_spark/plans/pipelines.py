@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import SCRATCH_DIR
 from ..functions.prices import (
     EUROZONE_ISO2,
     collapse_eurozone,
@@ -38,6 +39,7 @@ from ..operators.deviation import group_vs_global_avg
 from ..sources.steam_api_source import API_PAYLOADS as _API_PAYLOADS
 from ..sources.steam_api_source import register_steam_source
 from ..sources.tables import read_table, values_frame
+from ..streaming.windows import run_to_memory_sink
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -405,8 +407,6 @@ def streaming_steam_source_extract(spark: SparkSession, sf_dir: str) -> DataFram
     plan on the stream, drained with availableNow into a memory sink. One
     poll covers all fixture payloads, so the result equals the batch
     form and shares its oracle."""
-    import uuid
-
     register_steam_source(spark)
     payloads = spark.readStream.format("steam_appdetails").load()
     extracted = payloads.select(
@@ -429,23 +429,14 @@ def streaming_steam_source_extract(spark: SparkSession, sf_dir: str) -> DataFram
             "usd_price"
         ),
     )
-    sink = f"stream_steam_{uuid.uuid4().hex[:8]}"
-    q = (
-        result.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return spark.table(run_to_memory_sink(result, "stream_steam", "append"))
 
 
 # ---------------------------------------------------------------------------
 # Partitioned parquet sink + latest-run discovery (S7/S9 write, S6/O32 read).
 # ---------------------------------------------------------------------------
 
-_SINK_DIR = "/root/repo/.scratch/yearly_run_parts"
+_SINK_DIR = f"{SCRATCH_DIR}/yearly_run_parts"
 
 _SINK_SQL = f"""
 WITH yearly AS (

@@ -187,9 +187,8 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """15-minute pair counts of purchase->error-within-10-min, computed
     as ONE streaming query: stream-stream interval join chained into a
     stateful windowed aggregate."""
-    import uuid
-
-    from ..sources.tables import events_stream
+    from ..sources.tables import events_stream, table_path
+    from ..streaming.windows import run_to_memory_sink
 
     p = (
         events_stream(spark, sf_dir)
@@ -226,7 +225,6 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_purchase_value"
         ),
     )
-    sink = f"stream_jw_{uuid.uuid4().hex[:8]}"
     # State partitions are sized to the stateful-key cardinality, not
     # the batch shuffle default: this chain carries THREE state stores
     # (two join sides + the window agg) per partition per micro-batch,
@@ -240,20 +238,9 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the result set is partitioning-invariant (oracle + boundary
     # tests). r11: sized by the shared footer-derived helper (reproduces
     # 4 at every local sf; scales with landed rows).
-    from ..streaming.windows import stateful_start, stream_state_partitions
-    from ..sources.tables import table_path
-
-    with stateful_start(
-        spark, stream_state_partitions(table_path(sf_dir, "events"))
-    ):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
+    sink = run_to_memory_sink(
+        out, "stream_jw", "append", events_path=table_path(sf_dir, "events")
+    )
     return spark.table(sink)
 
 

@@ -38,13 +38,13 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
 from ..sources.tables import TABLE_SCHEMAS, read_table
+from ..streaming.windows import run_to_memory_sink
 from .registry import register
 
 # ===========================================================================
@@ -262,7 +262,6 @@ def _restart_run_once(spark: SparkSession, src: str, ckpt: str) -> str:
         .format("parquet")
         .load(src)
     )
-    sink = f"restart_q_{uuid.uuid4().hex[:8]}"
     # State partitions sized to key cardinality, not the batch shuffle
     # default (the r8 state-store lesson, round8.py:231): the state grain
     # is (hour, event_type) — hundreds of keys — and each availableNow
@@ -276,20 +275,13 @@ def _restart_run_once(spark: SparkSession, src: str, ckpt: str) -> str:
     # helper over the scratch landing (floor=8, the r9-measured value at
     # local scale; Spark restores the run-1 count from the checkpoint if
     # a larger run-2 landing would derive differently).
-    from ..streaming.windows import stateful_start, stream_state_partitions
-
-    with stateful_start(spark, stream_state_partitions(src, floor=8)):
-        q = (
-            _restart_agg(stream)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return sink
+    return run_to_memory_sink(
+        _restart_agg(stream),
+        "restart_q",
+        checkpoint=ckpt,
+        events_path=src,
+        floor=8,
+    )
 
 
 @register("streaming_restart_carryover", _RESTART_SQL)
@@ -680,7 +672,6 @@ def streaming_state_introspection(
             .format("parquet")
             .load(src)
         )
-        sink = f"ssi_{uuid.uuid4().hex[:8]}"
         # State partitions sized to key cardinality (the r8 state-store
         # lesson, round8.py:231): (hour, event_type) state is hundreds
         # of keys; 8 partitions cut both the commit I/O of the
@@ -689,22 +680,12 @@ def streaming_state_introspection(
         # output (CLAUDE.md), so the count is free to change. r11: sized
         # by the shared footer-derived helper (floor=8, the r9-measured
         # value at local scale; scales with landed rows).
-        from ..streaming.windows import stateful_start, stream_state_partitions
-
-        with stateful_start(spark, stream_state_partitions(src, floor=8)):
-            q = (
-                stream.groupBy(
-                    F.window("ts", "1 hour").alias("w"), "event_type"
-                )
-                .agg(F.count(F.lit(1)).alias("n"))
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
+        counts = stream.groupBy(
+            F.window("ts", "1 hour").alias("w"), "event_type"
+        ).agg(F.count(F.lit(1)).alias("n"))
+        sink = run_to_memory_sink(
+            counts, "ssi", checkpoint=ckpt, events_path=src, floor=8
+        )
         state = spark.read.format("statestore").load(ckpt)
         audited = state.groupBy(
             F.col("key.event_type").alias("event_type")

@@ -8,15 +8,16 @@ single logical key exceeds what one task should hold.)
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import SCRATCH_DIR
 from ..functions.rounding import dround, dround_sql as R
 from ..sources.tables import events_stream as _events_stream
 from ..sources.tables import read_table, table_path
+from ..streaming.windows import run_to_memory_sink
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -59,20 +60,6 @@ def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         dround(F.sum("ps"), 4).alias("sum_value"),
         dround(F.max("pm"), 4).alias("max_value"),
     )
-
-
-
-def _run_to_memory(df: DataFrame, prefix: str, mode: str) -> str:
-    sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink
 
 
 # ---------------------------------------------------------------------------
@@ -129,8 +116,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e_ts").cast("long").alias("e_epoch"),
         dround(F.col("p_value"), 4).alias("purchase_value"),
     )
-    sink = _run_to_memory(joined, "stream_ivjoin", "append")
-    return spark.table(sink)
+    return spark.table(run_to_memory_sink(joined, "stream_ivjoin", "append"))
 
 
 # ---------------------------------------------------------------------------
@@ -212,8 +198,7 @@ def streaming_leftouter_interval_join(
         F.col("e_ts").cast("long").alias("e_epoch"),
         dround(F.col("p_value"), 4).alias("purchase_value"),
     )
-    sink = _run_to_memory(joined, "stream_lojoin", "append")
-    return spark.table(sink)
+    return spark.table(run_to_memory_sink(joined, "stream_lojoin", "append"))
 
 
 # ---------------------------------------------------------------------------
@@ -292,8 +277,7 @@ def streaming_fullouter_interval_join(
         F.col("e_ts").cast("long").alias("e_epoch"),
         dround(F.col("p_value"), 4).alias("purchase_value"),
     )
-    sink = _run_to_memory(joined, "stream_fojoin", "append")
-    return spark.table(sink)
+    return spark.table(run_to_memory_sink(joined, "stream_fojoin", "append"))
 
 
 # ---------------------------------------------------------------------------
@@ -348,8 +332,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = _run_to_memory(agg, "stream_session", "complete")
-    return spark.table(sink)
+    return spark.table(run_to_memory_sink(agg, "stream_session", "complete"))
 
 
 # ---------------------------------------------------------------------------
@@ -480,7 +463,7 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    out_dir = f"/root/repo/.scratch/febatch_{uuid.uuid4().hex[:8]}"
+    out_dir = f"{SCRATCH_DIR}/febatch_{uuid.uuid4().hex[:8]}"
 
     agg = (
         _events_stream(spark, sf_dir)
@@ -559,8 +542,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         dround(F.col("value"), 4).alias("value"),
     )
-    sink = _run_to_memory(enriched, "enrich", "append")
-    return spark.table(sink)
+    return spark.table(run_to_memory_sink(enriched, "enrich", "append"))
 
 
 # ---------------------------------------------------------------------------
@@ -680,8 +662,7 @@ def streaming_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-    sink = _run_to_memory(out, "stream_multires", "append")
-    return spark.table(sink)
+    return spark.table(run_to_memory_sink(out, "stream_multires", "append"))
 
 
 # ---------------------------------------------------------------------------
@@ -852,9 +833,9 @@ def _rebuild_bucketed(spark: SparkSession, sf_dir: str, name: str,
 
     sfkey = re.sub(r"\W+", "_", sf_dir).strip("_")
     name = f"{name}_{sfkey}"
-    loc = f"/root/repo/.scratch/bucketed/{name}"
-    marker = f"/root/repo/.scratch/bucketed/{name}.source"
-    lockpath = f"/root/repo/.scratch/bucketed/{name}.lock"
+    loc = f"{SCRATCH_DIR}/bucketed/{name}"
+    marker = f"{loc}.source"
+    lockpath = f"{loc}.lock"
     os.makedirs(os.path.dirname(lockpath), exist_ok=True)
 
     def landed() -> bool:
@@ -1216,8 +1197,7 @@ def streaming_semi_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_ts").cast("long").alias("p_epoch"),
         dround(F.col("p_value"), 4).alias("purchase_value"),
     )
-    sink = _run_to_memory(joined, "stream_semijoin", "append")
-    return spark.table(sink)
+    return spark.table(run_to_memory_sink(joined, "stream_semijoin", "append"))
 
 
 # ---------------------------------------------------------------------------

@@ -16,12 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import SCRATCH_DIR
 from ..functions.rounding import dround, dround_sql as R
 from ..sources.tables import read_table
 from .registry import register
 
-_ORC_DIR = "/root/repo/.scratch/orders_orc"
-_TEXT_DIR = "/root/repo/.scratch/documents_text"
+_ORC_DIR = f"{SCRATCH_DIR}/orders_orc"
+_TEXT_DIR = f"{SCRATCH_DIR}/documents_text"
 
 
 _ORC_SQL = f"""
@@ -94,7 +95,7 @@ def text_source_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # binaryFile source: the file-per-record ingestion path for multimodal data.
 # ---------------------------------------------------------------------------
 
-_BINARY_DIR = "/root/repo/.scratch/documents_bin"
+_BINARY_DIR = f"{SCRATCH_DIR}/documents_bin"
 _BINARY_MAX_ID = 64  # bounded, sf-independent landing set
 
 _BINARYFILE_SQL = f"""
@@ -142,7 +143,7 @@ def binaryfile_source_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_XML_DIR = "/root/repo/.scratch/supplier_xml"
+_XML_DIR = f"{SCRATCH_DIR}/supplier_xml"
 
 _XML_SQL = f"""
 SELECT s_nationkey, CAST(count(*) AS BIGINT) AS n_suppliers,

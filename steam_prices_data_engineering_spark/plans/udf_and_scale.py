@@ -19,6 +19,7 @@ from pyspark.sql.functions import pandas_udf
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.vectors import dot, norm, to_double_array
 from ..sources.tables import read_table
+from ..streaming.windows import run_to_memory_sink
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -199,8 +200,6 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     a memory sink, then aggregated batch-side. With one availableNow batch
     the dedup keeps exactly one row per key, so per-user key counts equal
     the batch COUNT(DISTINCT) oracle."""
-    import uuid
-
     from ..sources.tables import events_stream
 
     stream = (
@@ -208,15 +207,7 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
-    sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sink = run_to_memory_sink(stream, "stream_dedup", "append")
     return (
         spark.table(sink)
         .groupBy("user_id")
@@ -243,7 +234,6 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     single availableNow batch the emitted totals equal the batch GROUP BY
     oracle."""
     import math
-    import uuid
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -285,16 +275,7 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = f"stream_state_{uuid.uuid4().hex[:8]}"
-    q = (
-        result.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return spark.table(run_to_memory_sink(result, "stream_state", "update"))
 
 
 # ---------------------------------------------------------------------------

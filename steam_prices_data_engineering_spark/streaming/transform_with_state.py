@@ -22,11 +22,12 @@ from __future__ import annotations
 
 import math
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .windows import run_to_memory_sink
 
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -114,15 +115,7 @@ def user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        sink = f"stream_tws_{uuid.uuid4().hex[:8]}"
-        q = (
-            result.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        sink = run_to_memory_sink(result, "stream_tws", "update")
     finally:
         if prev is None:
             spark.conf.unset(_PROVIDER_KEY)

@@ -154,8 +154,9 @@ _SHUFFLE_CONF_LOCK = threading.Lock()
 
 
 @contextmanager
-def stateful_start(spark, parts):
-    """Start a stateful stream with `parts` state-store partitions.
+def stateful_start(spark, parts=None):
+    """Start a stateful stream with `parts` state-store partitions
+    (None: the session's count, still started under the lock).
 
     Run `writeStream...start()` inside this block. Spark clones the
     session conf into the query when `start()` runs, and the first
@@ -167,7 +168,7 @@ def stateful_start(spark, parts):
     starts on one session. Await termination outside the block."""
     with _SHUFFLE_CONF_LOCK:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts or prev))
         try:
             yield
         finally:
@@ -175,44 +176,42 @@ def stateful_start(spark, parts):
 
 
 def run_to_memory_sink(
-    agg: DataFrame,
+    df: DataFrame,
     prefix: str,
-    state_partitions: int = 4,
+    mode: str = "complete",
+    checkpoint: str | None = None,
     events_path: str | None = None,
-):
-    """Run a streaming aggregation to completion (availableNow) into a
-    memory sink; return the materialized table.
+    floor: int = 4,
+) -> str:
+    """Drain a stream to completion (availableNow) into a memory sink and
+    return the sink's table name; read the result with `spark.table`.
 
-    These aggregates key on a handful of (window, dim) values, so the
-    session default (32) state partitions makes every micro-batch commit
-    mostly-empty state files — pure commit I/O (the round-8
-    streaming_join_then_window lesson, 18.2s -> 3.1s; re-measured here:
-    enriched tumbling agg 1.95s -> ~1.3s at sf0.1). Sized via
-    `stream_state_partitions` (footer-derived, env-overridable; r10
-    sweep: 4 beat 8 in every paired round on the enriched agg at sf0.1,
-    and the derivation reproduces 4 there) and applied through
-    `stateful_start`. Partition count never reaches compared columns —
-    values identical."""
-    import os
-
-    spark = agg.sparkSession
-    if events_path is not None:
-        parts = stream_state_partitions(events_path, floor=state_partitions)
-    else:
-        parts = os.environ.get(
-            "SPARK_GRAFT_STREAM_STATE_PARTITIONS", str(state_partitions)
-        )
+    This is the one place the package starts a memory-sink stream. With
+    `events_path` the state store is sized from that parquet landing's
+    footer (`stream_state_partitions(events_path, floor)`): windowed
+    aggregates key on a handful of (window, dim) values, so the session
+    default (32) makes every micro-batch commit mostly-empty state files
+    (the round-8 streaming_join_then_window lesson, 18.2s -> 3.1s;
+    enriched tumbling agg 1.95s -> ~1.3s at sf0.1). Without it the
+    stream runs at the session's count. Either way `start()` runs inside
+    `stateful_start`, so a concurrent sized start on the same session
+    cannot leak its count into this one. `checkpoint` keeps state across
+    runs; the first run pins the count. Partition count never reaches
+    compared columns."""
+    parts = stream_state_partitions(events_path, floor) if events_path else None
     sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    with stateful_start(spark, parts):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
+    writer = (
+        df.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+    )
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    with stateful_start(df.sparkSession, parts):
+        q = writer.start()
     q.awaitTermination()
-    return spark.table(sink)
+    return sink
 
 
 def streaming_tumbling_counts(
@@ -238,7 +237,9 @@ def streaming_tumbling_counts(
             "sum_value",
         )
     )
-    return run_to_memory_sink(agg, "stream_tumble", events_path=events_path)
+    return spark.table(
+        run_to_memory_sink(agg, "stream_tumble", events_path=events_path)
+    )
 
 
 def streaming_sliding_counts(
@@ -266,7 +267,9 @@ def streaming_sliding_counts(
             "avg_value",
         )
     )
-    return run_to_memory_sink(agg, "stream_slide", events_path=events_path)
+    return spark.table(
+        run_to_memory_sink(agg, "stream_slide", events_path=events_path)
+    )
 
 
 def streaming_static_enriched_counts(
@@ -315,4 +318,6 @@ def streaming_static_enriched_counts(
             ).alias("sum_value"),
         )
     )
-    return run_to_memory_sink(agg, "stream_enrich", events_path=events_path)
+    return spark.table(
+        run_to_memory_sink(agg, "stream_enrich", events_path=events_path)
+    )

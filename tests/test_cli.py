@@ -11,13 +11,14 @@ import yaml
 
 from pyspark.sql import functions as F
 
+from steam_prices_data_engineering_spark import SCRATCH_DIR
 from steam_prices_data_engineering_spark.cli import run_jobs
 
 CONFIG = {
     "app_name": "cli-test",
     "source": {"sf_dir": "/root/testdata/sf0.001"},
     "target": {
-        "output_dir": "/root/repo/.scratch/cli_test_out",
+        "output_dir": f"{SCRATCH_DIR}/cli_test_out",
         "prices_key": "steam_etl",
         "worldmap_key": "world_map",
     },
@@ -79,7 +80,7 @@ def test_cli_streaming_rollup_incremental_and_idempotent(spark):
         "app_name": "cli-stream-test",
         "source": {"sf_dir": "/root/testdata/sf0.001"},
         "target": {
-            "output_dir": "/root/repo/.scratch/cli_stream_out",
+            "output_dir": f"{SCRATCH_DIR}/cli_stream_out",
             "prices_key": "steam_etl",
             "worldmap_key": "world_map",
         },

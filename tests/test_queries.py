@@ -6,6 +6,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from steam_prices_data_engineering_spark import REPO_ROOT
 from steam_prices_data_engineering_spark.plans import registry
 
 import sys
@@ -260,7 +261,7 @@ def _old_round2_sample_doc():
 
 
 def test_entry_smoke(spark):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import __spark_entry__ as entrymod
 
     df = entrymod.entry(spark)

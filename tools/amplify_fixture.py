@@ -2,7 +2,7 @@
 "one decade up" landing for scale probing (VERDICT r6 task 7).
 
 Usage: python tools/amplify_fixture.py [src_sf_dir] [out_dir] [factor]
-Defaults: /root/testdata/sf0.1 /root/repo/.scratch/sf1x 10
+Defaults: the sf0.1 fixture, `.scratch/sf1x` under the checkout, 10
 
 Amplification must preserve each query's CANDIDATE-SET GROWTH LAW, not
 just its row count: naively replicating documents verbatim makes every
@@ -153,7 +153,10 @@ def build(src_dir: str, out_dir: str, factor: int = 10) -> str:
 
 
 if __name__ == "__main__":
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from steam_prices_data_engineering_spark import SCRATCH_DIR
+
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scratch/sf1x"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(SCRATCH_DIR, "sf1x")
     factor = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     print(build(src, out, factor))

@@ -8,7 +8,8 @@ rollup that `cli.run_jobs` starts as job 3. Every `writeStream.start()`
 the builder makes is captured, and its last executed plan (explain
 extended) is written to `OUT_DIR/<NAME>.txt`. The state operators' lines
 carry `numPartitions`. Run ids, checkpoint paths, scratch dirs,
-expression and plan ids are masked, so two checkouts' dumps diff cleanly.
+expression and plan ids, wall-clock batch timestamps and SF_DIR are
+masked, so two checkouts' dumps diff cleanly.
 """
 
 from __future__ import annotations
@@ -34,6 +35,9 @@ _MASKS = [
     (re.compile(r"_[0-9a-f]{8}\b"), "_<id>"),
     (re.compile(r"@[0-9a-f]+\b"), "@<obj>"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    # the wall-clock batch timestamp (ms) that the (flat)MapGroupsWithState
+    # operators print right after their timeout conf
+    (re.compile(r"(Timeout, )\d+"), r"\1<batch-ms>"),
 ]
 
 
@@ -75,6 +79,7 @@ def main() -> None:
     args = ap.parse_args()
     os.makedirs(args.out_dir, exist_ok=True)
 
+    sf_dir = os.path.abspath(args.sf_dir)
     started = []
     start = DataStreamWriter.start
 
@@ -91,7 +96,8 @@ def main() -> None:
             started.clear()
             _run(spark, name, args.sf_dir, scratch)
             plans = [
-                _mask(q._jsq.explainInternal(True)) for q in started
+                _mask(q._jsq.explainInternal(True)).replace(sf_dir, "<sf_dir>")
+                for q in started
             ]
             path = os.path.join(args.out_dir, f"{name}.txt")
             with open(path, "w") as f:

@@ -38,6 +38,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
+from steam_prices_data_engineering_spark import SCRATCH_DIR
 from steam_prices_data_engineering_spark.plans import registry
 from steam_prices_data_engineering_spark.session import get_spark
 from tools.amplify_fixture import build
@@ -156,7 +157,7 @@ def _time_and_count(spark, qs, name, sf_dir):
 
 
 def main():
-    amplified = build("/root/testdata/sf0.1", "/root/repo/.scratch/sf1x", 10)
+    amplified = build(dict(SCALES)["10x"], os.path.join(SCRATCH_DIR, "sf1x"), 10)
     scales = [(lbl, d or amplified) for lbl, d in SCALES]
 
     spark = get_spark(app_name="scale-probe-100x")
