@@ -166,13 +166,6 @@ def fingerprint_from_hashes(hashes: Column) -> Column:
     )
 
 
-def fingerprint(text: Column) -> Column:
-    """Order-sensitive rolling document fingerprint: polynomial hash over
-    per-token arithmetic hashes, mod 1e9+7. Reproducible in DuckDB via
-    list_reduce, so it is oracle-checkable."""
-    return fingerprint_from_hashes(F.transform(tokens(text), token_hash))
-
-
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality score: rewards lexical diversity, penalizes
     stopword density and extreme length. Heuristic, but deterministic and

@@ -15,8 +15,8 @@ Four tiers, all shuffle-conscious:
   reproducible in ANSI SQL — the DuckDB oracle can check LSH candidate
   generation itself, not just the final verify step. Candidates join on band
   equality (equi shuffle join, never a cross product).
-- simhash: 64-bit-ish simhash over token hashes via bit-majority, expressed
-  with explode + groupBy (documented here, exposed through plans/registry).
+- simhash_table: 16-bit simhash over token hashes via bit-majority, expressed
+  with explode + groupBy.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
 
-from ..functions.text import shingles, token_hash, tokens
+from ..functions.text import shingles
 
 # Universal-hash parameters for MinHash: (a, b) pairs, h_i(x) = (a*x + b) mod P.
 # Fixed constants so Spark and the SQL oracle agree bit-for-bit.
@@ -155,26 +155,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_id_a", "doc_id_b", "jaccard")
     )
-
-
-def _universal(a: int, b: int):
-    # closure factory: PySpark introspects lambda arity, so default-arg
-    # lambdas (x, a=a, b=b) would be mistaken for ternary lambdas
-    return lambda x: F.pmod(x * a + b, F.lit(MINHASH_PRIME))
-
-
-def minhash_signature(text_col: F.Column) -> list[F.Column]:
-    """MinHash signature columns over distinct word-3-gram shingle hashes.
-
-    NOTE: each returned column re-derives the shingle/hash chain; prefer
-    `minhash_lsh_pairs`, which stages the chain once per doc through
-    explicit projections (Catalyst's CollapseProject would otherwise inline
-    the expensive transform 8x)."""
-    sh = F.array_distinct(shingles(text_col, 3))
-    hashes = F.transform(sh, token_hash)
-    return [
-        F.array_min(F.transform(hashes, _universal(a, b))) for a, b in MINHASH_PARAMS
-    ]
 
 
 def hashed_shingle_table(docs: DataFrame, spread_input: bool = False) -> DataFrame:
@@ -335,12 +315,6 @@ def simhash_from_hashes(hashes: F.Column, bits: int = 16) -> F.Column:
             F.lit(0).cast("long")
         )
     return acc
-
-
-def simhash(text_col: F.Column, bits: int = 16) -> F.Column:
-    """SimHash computed directly from text (see simhash_from_hashes)."""
-    hashes = F.transform(tokens(text_col), token_hash)
-    return simhash_from_hashes(hashes, bits)
 
 
 def simhash_table(

@@ -56,6 +56,18 @@ _CEP_SYM_SQL = (
     "WHEN 'purchase' THEN 'P' WHEN 'signup' THEN 'S' ELSE 'E' END"
 )
 
+
+def _cep_sym() -> F.Column:
+    """The event-symbol column; Spark twin of `_CEP_SYM_SQL`."""
+    return (
+        F.when(F.col("event_type") == "view", "V")
+        .when(F.col("event_type") == "click", "C")
+        .when(F.col("event_type") == "purchase", "P")
+        .when(F.col("event_type") == "signup", "S")
+        .otherwise("E")
+    )
+
+
 _CEP_SQL = f"""
 WITH flagged AS (
     SELECT user_id, ts, event_id, {_CEP_SYM_SQL} AS sym,
@@ -98,13 +110,6 @@ def event_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     search with the same POSIX-class-free syntax, so the patterns above
     are engine-portable by construction."""
     e = read_table(spark, sf_dir, "events")
-    sym = (
-        F.when(F.col("event_type") == "view", "V")
-        .when(F.col("event_type") == "click", "C")
-        .when(F.col("event_type") == "purchase", "P")
-        .when(F.col("event_type") == "signup", "S")
-        .otherwise("E")
-    )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag(F.col("ts")).over(w)
     new_sess = (
@@ -116,7 +121,7 @@ def event_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "event_id",
-        sym.alias("sym"),
+        _cep_sym().alias("sym"),
         F.sum(new_sess).over(wsum).alias("session_idx"),
     )
     # array_sort on struct(ts, event_id, sym) orders by ts then event_id
@@ -456,17 +461,10 @@ def streaming_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import events_stream
     from ..streaming.windows import run_to_memory_sink
 
-    sym = (
-        F.when(F.col("event_type") == "view", "V")
-        .when(F.col("event_type") == "click", "C")
-        .when(F.col("event_type") == "purchase", "P")
-        .when(F.col("event_type") == "signup", "S")
-        .otherwise("E")
-    )
     stream = (
         events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
-        .select("user_id", "ts", "event_id", sym.alias("sym"))
+        .select("user_id", "ts", "event_id", _cep_sym().alias("sym"))
     )
     agg = (
         stream.groupBy(
@@ -493,7 +491,7 @@ def streaming_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_like(F.col("syms"), F.lit(_CEP_PATTERNS[1][1])),
         )
     )
-    return spark.table(run_to_memory_sink(agg, "stream_cep", "complete"))
+    return run_to_memory_sink(agg, "stream_cep", "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -621,13 +619,6 @@ def frequent_event_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram expansion stays bounded because the inactivity gap bounds
     session length."""
     e = read_table(spark, sf_dir, "events")
-    sym = (
-        F.when(F.col("event_type") == "view", "V")
-        .when(F.col("event_type") == "click", "C")
-        .when(F.col("event_type") == "purchase", "P")
-        .when(F.col("event_type") == "signup", "S")
-        .otherwise("E")
-    )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag(F.col("ts")).over(w)
     new_sess = (
@@ -639,7 +630,7 @@ def frequent_event_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "event_id",
-        sym.alias("sym"),
+        _cep_sym().alias("sym"),
         F.sum(new_sess).over(wsum).alias("session_idx"),
     )
     strings = ids.groupBy("user_id", "session_idx").agg(

@@ -84,13 +84,6 @@ def _sql_values(rows: list[tuple], cols: list[str], name: str) -> str:
     return f"{name}({', '.join(cols)}) AS (VALUES {body})"
 
 
-def _values_frame(spark: SparkSession, rows: list[tuple], cols: list[str]) -> DataFrame:
-    """Static dim as a SQL VALUES local relation — see
-    sources/tables.py:values_frame (shared by every plan module; kept as
-    an alias here for the pipeline dims)."""
-    return values_frame(spark, rows, cols)
-
-
 # ---------------------------------------------------------------------------
 # Deterministic localized price synthesis (replaces the live Steam fetch, S1).
 # Arithmetic on (app, cc) only, reproducible in both engines:
@@ -175,8 +168,8 @@ def _job1_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("p_partkey") <= 14)
         .select(F.col("p_partkey").cast("long").alias("app"))
     )
-    countries = _values_frame(spark, COUNTRIES, ["cc", "currency"])
-    fx = _values_frame(spark, FX_RATES, ["rate_cur", "rate"])
+    countries = values_frame(spark, COUNTRIES, ["cc", "currency"])
+    fx = values_frame(spark, FX_RATES, ["rate_cur", "rate"])
     pairs = apps.crossJoin(F.broadcast(countries))
     fetched = pairs.join(
         F.broadcast(fx), F.upper(F.col("currency")) == F.col("rate_cur"), "left"
@@ -281,9 +274,9 @@ def world_map_job2_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "usd_price",
         avg_alias="grp",
     )
-    iso = _values_frame(spark, ISO_MAP, ["alpha2", "alpha3"])
+    iso = values_frame(spark, ISO_MAP, ["alpha2", "alpha3"])
     devi = dev.join(F.broadcast(iso), dev.c2 == iso.alpha2, "left")
-    geo = _values_frame(spark, WORLD_GEO, ["iso_a2", "iso_a3", "continent"]).select(
+    geo = values_frame(spark, WORLD_GEO, ["iso_a2", "iso_a3", "continent"]).select(
         collapse_eurozone(F.col("iso_a2")).alias("iso_a2"), "iso_a3", "continent"
     )
     merged = geo.join(F.broadcast(devi), geo.iso_a3 == devi.alpha3, "left")
@@ -335,16 +328,12 @@ FROM extracted LEFT JOIN fx ON currency = rate_cur
 """
 
 
-@register("steam_api_json_extract", _API_JSON_SQL)
-def steam_api_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON-path extraction from raw Steam appdetails payloads (S1,
-    `external_resources.py:116-137`): `$.<appid>.data.price_overview.*` via
-    get_json_object, missing/failed payloads -> NULL row values (the
-    reference's assert-and-skip becomes NULL propagation), then the same
-    parse + FX pipeline as job 1."""
-    payloads = values_frame(spark, _API_PAYLOADS, ["app", "body"]).select(
-        F.col("app").cast("long"), "body"
-    )
+def _extract_usd_prices(spark: SparkSession, payloads: DataFrame) -> DataFrame:
+    """(app, body) payloads -> `$.<appid>.data.price_overview.*` via
+    get_json_object (missing/failed payloads -> NULL row values; the
+    reference's assert-and-skip becomes NULL propagation), then the job-1
+    broadcast FX join + locale parse. Batch and streaming payload frames
+    share this one plan and the one oracle."""
     extracted = payloads.select(
         "app",
         F.expr(
@@ -354,7 +343,7 @@ def steam_api_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             "get_json_object(body, concat('$.', app, '.data.price_overview.currency'))"
         ).alias("currency"),
     )
-    fx = _values_frame(spark, FX_RATES, ["rate_cur", "rate"])
+    fx = values_frame(spark, FX_RATES, ["rate_cur", "rate"])
     return extracted.join(
         F.broadcast(fx), F.col("currency") == F.col("rate_cur"), "left"
     ).select(
@@ -365,38 +354,29 @@ def steam_api_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             "usd_price"
         ),
     )
+
+
+@register("steam_api_json_extract", _API_JSON_SQL)
+def steam_api_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JSON-path extraction from raw Steam appdetails payloads (S1,
+    `external_resources.py:116-137`), payloads as a static VALUES
+    relation."""
+    payloads = values_frame(spark, _API_PAYLOADS, ["app", "body"]).select(
+        F.col("app").cast("long"), "body"
+    )
+    return _extract_usd_prices(spark, payloads)
 
 
 @register("steam_pysource_extract", _API_JSON_SQL)
 def steam_pysource_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same S1 extraction, but the payloads arrive through the CUSTOM
     PYTHON DATASOURCE (`spark.read.format("steam_appdetails")`,
-    sources/steam_api_source.py) instead of a driver-side createDataFrame:
-    one input partition per app id is the parallel-fetch contract a real
-    REST connector needs at scale. Downstream extraction/parse/FX join is
-    identical, so the oracle is shared with steam_api_json_extract."""
+    sources/steam_api_source.py) instead of a static relation: one input
+    partition per app id is the parallel-fetch contract a real REST
+    connector needs at scale."""
     register_steam_source(spark)
     payloads = spark.read.format("steam_appdetails").load()
-    extracted = payloads.select(
-        "app",
-        F.expr(
-            "get_json_object(body, concat('$.', app, '.data.price_overview.final_formatted'))"
-        ).alias("price_str"),
-        F.expr(
-            "get_json_object(body, concat('$.', app, '.data.price_overview.currency'))"
-        ).alias("currency"),
-    )
-    fx = _values_frame(spark, FX_RATES, ["rate_cur", "rate"])
-    return extracted.join(
-        F.broadcast(fx), F.col("currency") == F.col("rate_cur"), "left"
-    ).select(
-        "app",
-        "price_str",
-        "currency",
-        dround(parse_price_usd(F.col("price_str"), F.col("rate")), 6).alias(
-            "usd_price"
-        ),
-    )
+    return _extract_usd_prices(spark, payloads)
 
 
 @register("streaming_steam_source_extract", _API_JSON_SQL)
@@ -409,27 +389,9 @@ def streaming_steam_source_extract(spark: SparkSession, sf_dir: str) -> DataFram
     form and shares its oracle."""
     register_steam_source(spark)
     payloads = spark.readStream.format("steam_appdetails").load()
-    extracted = payloads.select(
-        "app",
-        F.expr(
-            "get_json_object(body, concat('$.', app, '.data.price_overview.final_formatted'))"
-        ).alias("price_str"),
-        F.expr(
-            "get_json_object(body, concat('$.', app, '.data.price_overview.currency'))"
-        ).alias("currency"),
+    return run_to_memory_sink(
+        _extract_usd_prices(spark, payloads), "stream_steam", "append"
     )
-    fx = _values_frame(spark, FX_RATES, ["rate_cur", "rate"])
-    result = extracted.join(
-        F.broadcast(fx), F.col("currency") == F.col("rate_cur"), "left"
-    ).select(
-        "app",
-        "price_str",
-        "currency",
-        dround(parse_price_usd(F.col("price_str"), F.col("rate")), 6).alias(
-            "usd_price"
-        ),
-    )
-    return spark.table(run_to_memory_sink(result, "stream_steam", "append"))
 
 
 # ---------------------------------------------------------------------------

@@ -1066,20 +1066,13 @@ def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("streaming_tumbling_window", _TUMBLING_SQL)
 def streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import table_path
-
-    return streaming_tumbling_counts(
-        spark, table_path(sf_dir, "events"), "10 minutes", watermark="1 hour"
-    )
+    return streaming_tumbling_counts(spark, sf_dir, "10 minutes", "1 hour")
 
 
 @register("streaming_sliding_window", _SLIDING_SQL)
 def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import table_path
-
     return streaming_sliding_counts(
-        spark, table_path(sf_dir, "events"), "10 minutes", "5 minutes",
-        watermark="1 hour",
+        spark, sf_dir, "10 minutes", "5 minutes", watermark="1 hour"
     )
 
 

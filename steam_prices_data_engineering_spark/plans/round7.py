@@ -72,7 +72,6 @@ GROUP BY 1, 2
 def streaming_enriched_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """15-minute tumbling counts per customer segment, dim joined
     stream-side (stream-static broadcast left join)."""
-    from ..sources.tables import table_path
     from ..streaming.windows import streaming_static_enriched_counts
 
     dim = read_table(spark, sf_dir, "customer").select(
@@ -80,7 +79,7 @@ def streaming_enriched_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFra
     )
     return streaming_static_enriched_counts(
         spark,
-        table_path(sf_dir, "events"),
+        sf_dir,
         dim,
         duration="15 minutes",
         watermark="1 hour",

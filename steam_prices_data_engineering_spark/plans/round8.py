@@ -187,32 +187,12 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """15-minute pair counts of purchase->error-within-10-min, computed
     as ONE streaming query: stream-stream interval join chained into a
     stateful windowed aggregate."""
-    from ..sources.tables import events_stream, table_path
-    from ..streaming.windows import run_to_memory_sink
+    from ..sources.tables import table_path
+    from ..streaming.windows import purchase_error_join, run_to_memory_sink
 
-    p = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("value").alias("p_value"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    e = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "error")
-        .select(F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts"))
-        .withWatermark("e_ts", "1 hour")
-    )
-    joined = p.join(
-        e,
-        (F.col("p_user") == F.col("e_user"))
-        & (F.col("e_ts") >= F.col("p_ts"))
-        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 10 MINUTES")),
-    )
-    agg = joined.groupBy(F.window("p_ts", "15 minutes").alias("w")).agg(
+    agg = purchase_error_join(spark, sf_dir).groupBy(
+        F.window("p_ts", "15 minutes").alias("w")
+    ).agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.sum(
             F.floor(F.col("p_value") * 1000000.0 + 0.5).cast("long")
@@ -238,10 +218,9 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the result set is partitioning-invariant (oracle + boundary
     # tests). r11: sized by the shared footer-derived helper (reproduces
     # 4 at every local sf; scales with landed rows).
-    sink = run_to_memory_sink(
+    return run_to_memory_sink(
         out, "stream_jw", "append", events_path=table_path(sf_dir, "events")
     )
-    return spark.table(sink)
 
 
 # ===========================================================================

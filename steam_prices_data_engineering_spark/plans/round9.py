@@ -256,7 +256,7 @@ def _restart_agg(stream: DataFrame) -> DataFrame:
     )
 
 
-def _restart_run_once(spark: SparkSession, src: str, ckpt: str) -> str:
+def _restart_run_once(spark: SparkSession, src: str, ckpt: str) -> DataFrame:
     stream = (
         spark.readStream.schema(TABLE_SCHEMAS["events"])
         .format("parquet")
@@ -317,11 +317,11 @@ def streaming_restart_carryover(
         n_even = parity_counts.get(0, 0)
         n_odd = parity_counts.get(1, 0)
         evens.write.mode("append").parquet(src)
-        sink1 = _restart_run_once(spark, src, ckpt)
-        n1 = spark.table(sink1).agg(F.sum("n_events")).collect()[0][0] or 0
+        run1 = _restart_run_once(spark, src, ckpt)
+        n1 = run1.agg(F.sum("n_events")).collect()[0][0] or 0
         odds.write.mode("append").parquet(src)
-        sink2 = _restart_run_once(spark, src, ckpt)
-        n2 = spark.table(sink2).agg(F.sum("n_events")).collect()[0][0] or 0
+        run2 = _restart_run_once(spark, src, ckpt)
+        n2 = run2.agg(F.sum("n_events")).collect()[0][0] or 0
         # exact carryover proof (empty-input safe: 0 == 0 on empty
         # events): run 1 saw exactly the even batch; the restarted run's
         # state covers even + odd — a rebuilt state would total only
@@ -333,8 +333,7 @@ def streaming_restart_carryover(
                 f"(expected {n_even + n_odd}) — state was rebuilt or "
                 "batch 2 leaked into run 1"
             )
-        spark.catalog.dropTempView(sink1)
-        return spark.table(sink2).select(
+        return run2.select(
             "hour_start", "event_type", "n_events", "sum_value_micro"
         )
     finally:
@@ -683,7 +682,7 @@ def streaming_state_introspection(
         counts = stream.groupBy(
             F.window("ts", "1 hour").alias("w"), "event_type"
         ).agg(F.count(F.lit(1)).alias("n"))
-        sink = run_to_memory_sink(
+        run_to_memory_sink(
             counts, "ssi", checkpoint=ckpt, events_path=src, floor=8
         )
         state = spark.read.format("statestore").load(ckpt)
@@ -703,7 +702,6 @@ def streaming_state_introspection(
         # bounded (event_type-grain) audit before the finally deletes
         # the checkpoint, and hand back a local relation
         rows = audited.collect()
-        spark.catalog.dropTempView(sink)
         return spark.createDataFrame(rows, audited.schema)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

@@ -11,14 +11,18 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import SCRATCH_DIR
 from ..functions.rounding import dround, dround_sql as R
 from ..sources.tables import events_stream as _events_stream
-from ..sources.tables import read_table, table_path
-from ..streaming.windows import run_to_memory_sink
-from .registry import register
+from ..sources.tables import read_table
+from ..streaming.windows import (
+    purchase_error_join,
+    run_to_memory_sink,
+    session_stats,
+    stateful_start,
+)
+from .registry import _SESSION_SQL, register
 
 # ---------------------------------------------------------------------------
 # Two-phase salted aggregation. events.event_type has ~6 distinct values —
@@ -89,34 +93,13 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (purchase -> errors within 10 min, per user). State on both sides is
     bounded by the watermark delay + interval width — the standard shape
     for joining two live event streams at scale."""
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("value").alias("p_value"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    errors = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "error")
-        .select(F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts"))
-        .withWatermark("e_ts", "1 hour")
-    )
-    joined = purchases.join(
-        errors,
-        (F.col("p_user") == F.col("e_user"))
-        & (F.col("e_ts") >= F.col("p_ts"))
-        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 10 MINUTES")),
-    ).select(
+    joined = purchase_error_join(spark, sf_dir).select(
         F.col("p_user").alias("user_id"),
         F.col("p_ts").cast("long").alias("p_epoch"),
         F.col("e_ts").cast("long").alias("e_epoch"),
         dround(F.col("p_value"), 4).alias("purchase_value"),
     )
-    return spark.table(run_to_memory_sink(joined, "stream_ivjoin", "append"))
+    return run_to_memory_sink(joined, "stream_ivjoin", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -170,35 +153,13 @@ def streaming_leftouter_interval_join(
     with a no-data micro-batch that advances the watermark to
     min(max p_ts, max e_ts) − 1 h, which is what flushes the expired
     unmatched rows; the oracle reproduces that rule in SQL."""
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("value").alias("p_value"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    errors = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "error")
-        .select(F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts"))
-        .withWatermark("e_ts", "1 hour")
-    )
-    joined = purchases.join(
-        errors,
-        (F.col("p_user") == F.col("e_user"))
-        & (F.col("e_ts") >= F.col("p_ts"))
-        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "left_outer",
-    ).select(
+    joined = purchase_error_join(spark, sf_dir, "left_outer").select(
         F.col("p_user").alias("user_id"),
         F.col("p_ts").cast("long").alias("p_epoch"),
         F.col("e_ts").cast("long").alias("e_epoch"),
         dround(F.col("p_value"), 4).alias("purchase_value"),
     )
-    return spark.table(run_to_memory_sink(joined, "stream_lojoin", "append"))
+    return run_to_memory_sink(joined, "stream_lojoin", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -249,90 +210,32 @@ def streaming_fullouter_interval_join(
     emit null-extended once the watermark proves no match can still
     arrive (per-side expiry rules in the section comment; state on both
     sides stays bounded by delay + interval width)."""
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("value").alias("p_value"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    errors = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "error")
-        .select(F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts"))
-        .withWatermark("e_ts", "1 hour")
-    )
-    joined = purchases.join(
-        errors,
-        (F.col("p_user") == F.col("e_user"))
-        & (F.col("e_ts") >= F.col("p_ts"))
-        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "full_outer",
-    ).select(
+    joined = purchase_error_join(spark, sf_dir, "full_outer").select(
         F.coalesce("p_user", "e_user").alias("user_id"),
         F.col("p_ts").cast("long").alias("p_epoch"),
         F.col("e_ts").cast("long").alias("e_epoch"),
         dround(F.col("p_value"), 4).alias("purchase_value"),
     )
-    return spark.table(run_to_memory_sink(joined, "stream_fojoin", "append"))
+    return run_to_memory_sink(joined, "stream_fojoin", "append")
 
 
 # ---------------------------------------------------------------------------
 # Streaming session windows: the batch session_stats plan run through
-# Structured Streaming (session_window + watermark). Oracle = the same
-# gaps-and-islands SQL as the batch variant.
+# Structured Streaming (session_window + watermark). Oracle = the batch
+# variant's gaps-and-islands SQL (registry._SESSION_SQL).
 # ---------------------------------------------------------------------------
 
-_STREAM_SESSION_SQL = f"""
-WITH flagged AS (
-    SELECT user_id, ts, value, event_id,
-           CASE WHEN lag(ts) OVER w IS NULL
-                     OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                THEN 1 ELSE 0 END AS new_sess
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sessioned AS (
-    SELECT user_id, ts, value,
-           sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS UNBOUNDED PRECEDING) AS sess_id
-    FROM flagged
-)
-SELECT user_id,
-       CAST(floor(epoch(min(ts))) AS BIGINT) AS session_start,
-       CAST(count(*) AS BIGINT) AS n_events,
-       {R('sum(value)', 4)} AS sum_value
-FROM sessioned
-GROUP BY user_id, sess_id
-"""
 
-
-@register("streaming_session_window", _STREAM_SESSION_SQL)
+@register("streaming_session_window", _SESSION_SQL)
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-min gap) in Structured Streaming: session_window
     merges adjacent state as events arrive; the watermark lets closed
     sessions emit and their state drop — the scalable form of per-user
     sessionization."""
     stream = _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    agg = (
-        stream.groupBy(
-            F.session_window("ts", "30 minutes").alias("w"), "user_id"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dround(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").cast("long").alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
+    return run_to_memory_sink(
+        session_stats(stream, "30 minutes"), "stream_session", "complete"
     )
-    return spark.table(run_to_memory_sink(agg, "stream_session", "complete"))
 
 
 # ---------------------------------------------------------------------------
@@ -483,12 +386,13 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    q = (
-        agg.writeStream.foreachBatch(write_batch)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
+    with stateful_start(spark):
+        q = (
+            agg.writeStream.foreachBatch(write_batch)
+            .outputMode("complete")
+            .trigger(availableNow=True)
+            .start()
+        )
     q.awaitTermination()
     result = (
         spark.read.parquet(out_dir)
@@ -542,7 +446,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         dround(F.col("value"), 4).alias("value"),
     )
-    return spark.table(run_to_memory_sink(enriched, "enrich", "append"))
+    return run_to_memory_sink(enriched, "enrich", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -662,7 +566,7 @@ def streaming_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-    return spark.table(run_to_memory_sink(out, "stream_multires", "append"))
+    return run_to_memory_sink(out, "stream_multires", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -1170,34 +1074,12 @@ WHERE p.event_type = 'purchase'
 def streaming_semi_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT SEMI join with watermarks + time-range
     condition: the streaming EXISTS (each matched purchase emits once)."""
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("value").alias("p_value"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    errors = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "error")
-        .select(F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts"))
-        .withWatermark("e_ts", "1 hour")
-    )
-    joined = purchases.join(
-        errors,
-        (F.col("p_user") == F.col("e_user"))
-        & (F.col("e_ts") >= F.col("p_ts"))
-        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "left_semi",
-    ).select(
+    joined = purchase_error_join(spark, sf_dir, "left_semi").select(
         F.col("p_user").alias("user_id"),
         F.col("p_ts").cast("long").alias("p_epoch"),
         dround(F.col("p_value"), 4).alias("purchase_value"),
     )
-    return spark.table(run_to_memory_sink(joined, "stream_semijoin", "append"))
+    return run_to_memory_sink(joined, "stream_semijoin", "append")
 
 
 # ---------------------------------------------------------------------------

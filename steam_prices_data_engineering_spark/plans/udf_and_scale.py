@@ -207,9 +207,8 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
-    sink = run_to_memory_sink(stream, "stream_dedup", "append")
     return (
-        spark.table(sink)
+        run_to_memory_sink(stream, "stream_dedup", "append")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_types"))
     )
@@ -275,7 +274,7 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return spark.table(run_to_memory_sink(result, "stream_state", "update"))
+    return run_to_memory_sink(result, "stream_state", "update")
 
 
 # ---------------------------------------------------------------------------

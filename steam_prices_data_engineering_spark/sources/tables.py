@@ -199,14 +199,20 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _ts_nanos_to_micros(df: DataFrame) -> DataFrame:
+    """events.ts stored as TIMESTAMP(NANOS) arrives as a raw long of
+    nanoseconds (nanosAsLong=true). Truncate ns->us, exactly what DuckDB
+    does when materializing TIMESTAMP_NS as its us-precision TIMESTAMP."""
+    return df.withColumn(
+        "ts", F.timestamp_micros(F.floor(F.col("ts") / 1000).cast("long"))
+    )
+
+
 def _read_table_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     schema = TABLE_SCHEMAS[name]
     df = spark.read.parquet(table_path(sf_dir, name))
-    # events.ts is TIMESTAMP(NANOS) on disk; with nanosAsLong=true it arrives
-    # as a raw long of nanoseconds. Truncate ns->us (exactly what DuckDB does
-    # when materializing TIMESTAMP_NS as its us-precision TIMESTAMP).
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.floor(F.col("ts") / 1000).cast("long")))
+        df = _ts_nanos_to_micros(df)
     # Reorder/cast only if the physical schema differs from the canonical one.
     needs_cast = [
         (f.name, f.dataType)
@@ -244,12 +250,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical = spark.read.parquet(path).schema["ts"].dataType
     schema = T.StructType(
         [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", physical),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
+            T.StructField("ts", physical) if f.name == "ts" else f
+            for f in TABLE_SCHEMAS["events"].fields
         ]
     )
     df = (
@@ -259,10 +261,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(base_dir)
     )
     if isinstance(physical, T.LongType):
-        # nanos-as-long: truncate ns->us like DuckDB materializing TIMESTAMP_NS
-        df = df.withColumn(
-            "ts", F.timestamp_micros(F.floor(F.col("ts") / 1000).cast("long"))
-        )
+        df = _ts_nanos_to_micros(df)
     elif not isinstance(physical, T.TimestampType):
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     _STREAM_MEMO[key] = df

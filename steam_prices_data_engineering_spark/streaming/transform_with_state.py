@@ -115,10 +115,9 @@ def user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        sink = run_to_memory_sink(result, "stream_tws", "update")
+        return run_to_memory_sink(result, "stream_tws", "update")
     finally:
         if prev is None:
             spark.conf.unset(_PROVIDER_KEY)
         else:
             spark.conf.set(_PROVIDER_KEY, prev)
-    return spark.table(sink)

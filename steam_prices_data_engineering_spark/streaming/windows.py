@@ -2,11 +2,13 @@
 
 Batch-first: `F.window` / `F.session_window` work identically on static
 DataFrames, which is what makes these oracle-checkable in DuckDB (tumbling =
-epoch bucketing; session = gaps-and-islands SQL). The streaming wrappers run
-the same logical plan through Structured Streaming with a watermark and an
-availableNow trigger, landing in a memory sink — with a single replayed batch
-no rows are late, so the result must equal the batch plan (the driver's
-oracle can therefore check the streaming path too).
+epoch bucketing; session = gaps-and-islands SQL). The streaming wrappers call
+the same batch functions on the watermarked events stream and drain it with
+an availableNow trigger through `run_to_memory_sink` — with a single replayed
+batch no rows are late, so the result must equal the batch plan (the
+driver's oracle can therefore check the streaming path too).
+`purchase_error_join` is the one stream-stream interval join over the same
+source.
 
 Window starts are returned as epoch seconds (long), not timestamps — the
 cross-engine value-hash is type-sensitive and epoch longs are unambiguous.
@@ -23,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
+from ..sources.tables import events_stream, table_path
 
 log = logging.getLogger("steam_prices_spark")
 
@@ -78,18 +81,6 @@ def session_stats(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
             "n_events",
             "sum_value",
         )
-    )
-
-
-def events_stream(spark, events_path: str, watermark: str = "1 hour") -> DataFrame:
-    """Watermarked parquet readStream over the events fixture; ts type
-    adaptation lives in the shared source helper."""
-    import os
-
-    from ..sources.tables import events_stream as _source
-
-    return _source(spark, os.path.dirname(events_path)).withWatermark(
-        "ts", watermark
     )
 
 
@@ -182,9 +173,11 @@ def run_to_memory_sink(
     checkpoint: str | None = None,
     events_path: str | None = None,
     floor: int = 4,
-) -> str:
+) -> DataFrame:
     """Drain a stream to completion (availableNow) into a memory sink and
-    return the sink's table name; read the result with `spark.table`.
+    return the result frame. The sink's temp view is dropped before
+    returning: the frame's plan holds the sink itself, so it still reads
+    the rows, and a long-lived session keeps no table per run.
 
     This is the one place the package starts a memory-sink stream. With
     `events_path` the state store is sized from that parquet landing's
@@ -208,73 +201,55 @@ def run_to_memory_sink(
     )
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    with stateful_start(df.sparkSession, parts):
+    spark = df.sparkSession
+    with stateful_start(spark, parts):
         q = writer.start()
-    q.awaitTermination()
-    return sink
+    try:
+        q.awaitTermination()
+        return spark.table(sink)
+    finally:
+        spark.catalog.dropTempView(sink)
 
 
 def streaming_tumbling_counts(
     spark,
-    events_path: str,
+    sf_dir: str,
     duration: str = "10 minutes",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Structured Streaming version of tumbling_counts: parquet readStream ->
-    withWatermark -> windowed agg -> memory sink, run to completion with
-    availableNow, then return the materialized result."""
-    stream = events_stream(spark, events_path, watermark)
-    agg = (
-        stream.groupBy(F.window("ts", duration).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dround(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").cast("long").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    return spark.table(
-        run_to_memory_sink(agg, "stream_tumble", events_path=events_path)
+    """`tumbling_counts` on the watermarked events stream, drained with
+    availableNow into a memory sink."""
+    stream = events_stream(spark, sf_dir).withWatermark("ts", watermark)
+    return run_to_memory_sink(
+        tumbling_counts(stream, duration),
+        "stream_tumble",
+        events_path=table_path(sf_dir, "events"),
     )
 
 
 def streaming_sliding_counts(
     spark,
-    events_path: str,
+    sf_dir: str,
     duration: str = "10 minutes",
     slide: str = "5 minutes",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Structured Streaming version of sliding_counts: each event enters
-    duration/slide overlapping windows; state holds one row per open window
-    and the watermark bounds how long a window stays open. With a single
-    availableNow replay nothing is late, so the result equals the batch
-    sliding plan and the batch oracle applies."""
-    stream = events_stream(spark, events_path, watermark)
-    agg = (
-        stream.groupBy(F.window("ts", duration, slide).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dround(F.avg("value"), 4).alias("avg_value"),
-        )
-        .select(
-            F.col("w.start").cast("long").alias("window_start"),
-            "n_events",
-            "avg_value",
-        )
-    )
-    return spark.table(
-        run_to_memory_sink(agg, "stream_slide", events_path=events_path)
+    """`sliding_counts` on the watermarked events stream: each event
+    enters duration/slide overlapping windows; state holds one row per
+    open window and the watermark bounds how long a window stays open.
+    With a single availableNow replay nothing is late, so the result
+    equals the batch sliding plan and the batch oracle applies."""
+    stream = events_stream(spark, sf_dir).withWatermark("ts", watermark)
+    return run_to_memory_sink(
+        sliding_counts(stream, duration, slide),
+        "stream_slide",
+        events_path=table_path(sf_dir, "events"),
     )
 
 
 def streaming_static_enriched_counts(
     spark,
-    events_path: str,
+    sf_dir: str,
     dim: DataFrame,
     duration: str = "15 minutes",
     watermark: str = "1 hour",
@@ -287,7 +262,7 @@ def streaming_static_enriched_counts(
     watermark. With one availableNow replay nothing is late, so the
     batch LEFT JOIN + GROUP BY oracle applies (the
     streaming_tumbling_counts equivalence contract)."""
-    stream = events_stream(spark, events_path, watermark)
+    stream = events_stream(spark, sf_dir).withWatermark("ts", watermark)
     joined = stream.join(
         F.broadcast(dim), stream["user_id"] == dim["c_custkey"], "left"
     )
@@ -318,6 +293,37 @@ def streaming_static_enriched_counts(
             ).alias("sum_value"),
         )
     )
-    return spark.table(
-        run_to_memory_sink(agg, "stream_enrich", events_path=events_path)
+    return run_to_memory_sink(
+        agg, "stream_enrich", events_path=table_path(sf_dir, "events")
+    )
+
+
+def purchase_error_join(spark, sf_dir: str, how: str = "inner") -> DataFrame:
+    """Stream-stream interval join of each purchase (p_user, p_ts,
+    p_value) to the errors (e_user, e_ts) the same user raised within the
+    following 10 minutes. Both sides carry a 1-hour watermark, so the
+    time-range condition bounds the join state on each side; `how` picks
+    the join type, and each caller selects its own output."""
+    purchases = (
+        events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
+            F.col("value").alias("p_value"),
+        )
+        .withWatermark("p_ts", "1 hour")
+    )
+    errors = (
+        events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "error")
+        .select(F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts"))
+        .withWatermark("e_ts", "1 hour")
+    )
+    return purchases.join(
+        errors,
+        (F.col("p_user") == F.col("e_user"))
+        & (F.col("e_ts") >= F.col("p_ts"))
+        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 10 MINUTES")),
+        how,
     )
